@@ -96,9 +96,6 @@ object Myers {
     path.reverse.toSeq
   }
 
-  def myersDiff(oldContent: String, newContent: String): Seq[(String, Int, Int)] =
-    diffSeq(splitlines(oldContent), splitlines(newContent))
-
   /** `generate_diff` operations (diff_generator.py:77-97). */
   def generateOps(oldContent: String, newContent: String): Seq[DiffOp] = {
     val a = splitlines(oldContent)

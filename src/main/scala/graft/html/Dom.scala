@@ -150,27 +150,6 @@ class Element(val name: String) extends Node {
     sb.toString
   }
 
-  /** bs4 `get_text(strip=True)`: each string Python-stripped, empties
-    * dropped (PyStr — NOT Java trim, which misses NBSP/U+2028/U+3000). */
-  def getTextStripped: String = {
-    val sb = new java.lang.StringBuilder
-    def walk(e: Element): Unit = {
-      val cs = e.children
-      var i = 0
-      while (i < cs.length) {
-        cs(i) match {
-          case t: Text    => sb.append(PyStr.strip(t.data))
-          case c: CData   => sb.append(PyStr.strip(c.data))
-          case c: Element => walk(c)
-          case _          =>
-        }
-        i += 1
-      }
-    }
-    walk(this)
-    sb.toString
-  }
-
   def findAll(tag: String): Vector[Element] =
     descendantElements.filter(_.name == tag)
 

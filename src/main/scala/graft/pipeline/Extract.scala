@@ -306,6 +306,39 @@ object Extract {
 
   final case class RunSummary(docs: Long, failures: Long, buckets: Int)
 
+  /** Row-group buffer cap for every bucketed write: each concurrent writer
+    * task holds up to `parquet.block.size` of encoder buffers, so local[32]
+    * with the default 128 MB peaks at ~4 GB of an 8 GB heap — the
+    * measured transient-OOM mode of the docs_clean write stage (the four
+    * sidecar jobs write concurrently too). 64 MB halves that peak for
+    * negligible read cost at the ≤64 MB bucket files these runs produce;
+    * a file under the cap is written the same with or without it. */
+  private val ParquetBlockBytes = 64L * 1024 * 1024
+
+  /** The one bucketed write: overwrite ONLY the `url_bucket` partitions
+    * present in `df` (dynamic overwrite, set per writer — the global conf is
+    * never mutated), so a resume or partial refresh leaves every other
+    * bucket's files untouched. */
+  private[pipeline] def writeBuckets(df: DataFrame, dir: String): Unit =
+    df.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic").partitionBy("url_bucket")
+      .option("parquet.block.size", ParquetBlockBytes)
+      .parquet(dir)
+
+  /** Does `path` exist with a non-hidden child (a data file or a partition
+    * dir)? The dynamic-overwrite committer writes no `_SUCCESS` marker and a
+    * zero-row write leaves no data child, so this — not a bare exists — is
+    * "is there anything to read". Asked through Hadoop FS so scheme-qualified
+    * paths (file://, hdfs://, s3a://) are seen too. */
+  private[pipeline] def hasData(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.exists(p) && fs.listStatus(p).exists { st =>
+      val n = st.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+  }
+
   /**
    * Full job: dedup → (optional changed-only) → extract → write all outputs
    * under `outDir`, skipping url_buckets already completed in the `progress`
@@ -322,9 +355,9 @@ object Extract {
     import spark.implicits._
 
     val ledgerPath = s"$outDir/progress"
+    val metricsPath = s"$outDir/metrics"
     val doneBuckets: Set[Int] =
-      if (!ledgerPath.contains("://") && !new java.io.File(ledgerPath).exists())
-        Set.empty // fresh run, no ledger yet (skip the noisy failed read)
+      if (!hasData(spark, ledgerPath)) Set.empty // fresh run, no ledger yet
       else
         try spark.read.parquet(ledgerPath)
           .filter($"run_id" === runId && $"status" === "done")
@@ -387,111 +420,78 @@ object Extract {
         extracted.repartition(numBuckets,
           element_at(typedLit(remap.toSeq), col("url_bucket") + 1))
       } else extracted
-    toWrite
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic").partitionBy("url_bucket")
-      // row-group buffer cap: every concurrent writer task holds up to
-      // parquet.block.size of encoder buffers, so local[32] with the
-      // default 128 MB peaks at ~4 GB of the 8 GB driver heap — the
-      // measured transient-OOM mode of this box's write stage. 64 MB
-      // halves the peak for negligible read cost at the ≤64 MB bucket
-      // files this run size produces; cluster deployments writing
-      // 512 MB–1 GB files restore the default via
-      // SPARK_GRAFT_PARQUET_BLOCK (scale-dependent setting, env-
-      // parameterised per the local-vs-cluster config rule).
-      .option("parquet.block.size",
-        sys.env.getOrElse("SPARK_GRAFT_PARQUET_BLOCK",
-          (64L * 1024 * 1024).toString))
-      .parquet(s"$outDir/docs_clean")
+    writeBuckets(toWrite, s"$outDir/docs_clean")
 
-    val processedBuckets = bucketAcc.value
-    val written = spark.read.parquet(s"$outDir/docs_clean")
-    // POSITIVE partition filter on the processed set: prunes to exactly
-    // this run's buckets (an incremental run over a few buckets no longer
-    // rewrites every sidecar partition in the dir)
-    val writtenRun = written.filter(
-      $"url_bucket".isin(processedBuckets.toSeq: _*))
-    // metrics from the WRITTEN columnar output (no recompute of the
-    // extraction; scans 4 narrow columns). Scoped to the buckets this run
-    // actually processed (accumulator set above — stale/done buckets'
-    // files are untouched and keep their metrics rows).
-    val docsClean = spark.read.parquet(s"$outDir/docs_clean")
-      .filter($"url_bucket".isin(processedBuckets.toSeq: _*))
-    val metrics = docsClean.groupBy($"url_bucket").agg(
-      count(lit(1)).as("docs_parsed"),
-      sum(when($"parse_failed", 1L).otherwise(0L)).as("parse_failures"),
-      sum($"size").as("input_bytes"),
-      sum(coalesce(length($"text").cast("long"), lit(0L))).as("output_chars"))
-      .withColumn("bytes_stripped", $"input_bytes" - $"output_chars")
-      .withColumn("run_id", lit(runId))
+    // nothing processed (zero-change recrawl, all-done resume): there is
+    // nothing to derive or to mark done, and docs_clean may hold no file
+    // to read back — skip straight to the summary
+    val processed = bucketAcc.value.toSeq
+    if (processed.nonEmpty) {
+      // this run's rows from the WRITTEN columnar output (no recompute of
+      // the extraction): a POSITIVE partition filter on the processed set
+      // prunes to exactly this run's buckets — stale/done buckets' files
+      // are untouched and keep their sidecar and metrics rows
+      val docsClean = spark.read.parquet(s"$outDir/docs_clean")
+        .filter($"url_bucket".isin(processed: _*))
+      val metrics = docsClean.groupBy($"url_bucket").agg(
+        count(lit(1)).as("docs_parsed"),
+        sum(when($"parse_failed", 1L).otherwise(0L)).as("parse_failures"),
+        sum($"size").as("input_bytes"),
+        sum(coalesce(length($"text").cast("long"), lit(0L))).as("output_chars"))
+        .withColumn("bytes_stripped", $"input_bytes" - $"output_chars")
+        .withColumn("run_id", lit(runId))
 
-    // all sidecars partitioned by url_bucket so a resume run's dynamic
-    // overwrite only touches the buckets it processed. The three sidecar
-    // writes and the metrics rollup are INDEPENDENT jobs over the
-    // just-written docs_clean (disjoint output dirs), so they are
-    // submitted concurrently from a small driver pool — the scheduler
-    // back-fills executors freed by one job's write tail with the next
-    // job's scan tasks instead of serializing four tails (guide §2.6;
-    // job descriptions are thread-local, failures rethrow via Await).
-    // metrics is partitioned + dynamic overwrite like the others: a full
-    // overwrite would wipe completed buckets' metrics on resume (and an
-    // all-done idempotent rerun would empty the whole sidecar the
-    // BASELINE metric reads).
-    val sidecarJobs: Seq[(String, () => Unit)] = Seq(
-      "doc_meta" -> (() =>
-        writtenRun.select($"meta.*", $"url_bucket")
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic").partitionBy("url_bucket")
-          .parquet(s"$outDir/doc_meta")),
-      "links" -> (() =>
-        writtenRun.select($"url".as("src_url"), explode($"links").as("l"), $"url_bucket")
-          .select($"src_url", $"l.*", $"url_bucket")
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic").partitionBy("url_bucket")
-          .parquet(s"$outDir/links")),
-      "anchors" -> (() =>
-        writtenRun.select($"url", explode($"anchors").as("anchor_id"), $"url_bucket")
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic").partitionBy("url_bucket")
-          .parquet(s"$outDir/anchors")),
-      "metrics" -> (() =>
-        metrics.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic").partitionBy("url_bucket")
-          .parquet(s"$outDir/metrics")))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(sidecarJobs.size)
-    try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val fs = sidecarJobs.map { case (nm, job) =>
-        scala.concurrent.Future {
-          spark.sparkContext.setJobDescription(s"extract.run sidecar: $nm")
-          job()
+      // all sidecars partitioned by url_bucket so a resume run's dynamic
+      // overwrite only touches the buckets it processed (a full overwrite
+      // of metrics would wipe completed buckets' rows). The four writes are
+      // INDEPENDENT jobs over the just-written docs_clean (disjoint output
+      // dirs), so they are submitted concurrently from a small thread pool
+      // — the scheduler back-fills executors freed by one job's write tail
+      // with the next job's scan tasks instead of serializing four tails
+      // (job descriptions are thread-local, failures rethrow via Await).
+      val sidecars: Seq[(String, DataFrame)] = Seq(
+        "doc_meta" -> docsClean.select($"meta.*", $"url_bucket"),
+        "links" -> docsClean
+          .select($"url".as("src_url"), explode($"links").as("l"), $"url_bucket")
+          .select($"src_url", $"l.*", $"url_bucket"),
+        "anchors" -> docsClean
+          .select($"url", explode($"anchors").as("anchor_id"), $"url_bucket"),
+        "metrics" -> metrics)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(sidecars.size)
+      try {
+        implicit val ec: scala.concurrent.ExecutionContext =
+          scala.concurrent.ExecutionContext.fromExecutorService(pool)
+        val fs = sidecars.map { case (nm, df) =>
+          scala.concurrent.Future {
+            spark.sparkContext.setJobDescription(s"extract.run sidecar: $nm")
+            writeBuckets(df, s"$outDir/$nm")
+          }
         }
-      }
-      fs.foreach(f =>
-        scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
-    } finally pool.shutdown()
+        fs.foreach(f =>
+          scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
+      } finally pool.shutdown()
 
-    // ledger append: every processed bucket marked done for this run.
-    // Derived from the just-WRITTEN metrics parquet (tiny — one row per
-    // bucket), not the unpersisted `metrics` frame: re-planning that frame
-    // would re-run the whole groupBy scan a second time.
-    val writtenMetrics = spark.read.parquet(s"$outDir/metrics")
-      .filter($"run_id" === runId)
-    val seq = doneBuckets.size.toLong
-    val ledger = writtenMetrics
-      .filter($"url_bucket".isin(processedBuckets.toSeq: _*))
-      .select(lit(runId).as("run_id"), $"url_bucket",
-        lit("done").as("status"), $"docs_parsed".as("docs"),
-        lit(seq).as("completed_seq"))
-    ledger.write.mode("append").parquet(ledgerPath)
+      // ledger append: every processed bucket marked done for this run.
+      // Derived from the just-WRITTEN metrics parquet (tiny — one row per
+      // bucket), not the unpersisted `metrics` frame: re-planning that
+      // frame would re-run the whole groupBy scan a second time.
+      spark.read.parquet(metricsPath)
+        .filter($"run_id" === runId && $"url_bucket".isin(processed: _*))
+        .select(lit(runId).as("run_id"), $"url_bucket",
+          lit("done").as("status"), $"docs_parsed".as("docs"),
+          lit(doneBuckets.size.toLong).as("completed_seq"))
+        .write.mode("append").parquet(ledgerPath)
+    }
 
     // summary covers the whole run across resume attempts (all metrics
     // rows carrying this runId), matching the resume-idempotence contract
-    val m = writtenMetrics
-      .agg(coalesce(sum($"docs_parsed"), lit(0L)),
-        coalesce(sum($"parse_failures"), lit(0L))).collect()(0)
-    RunSummary(m.getLong(0), m.getLong(1), numBuckets)
+    if (!hasData(spark, metricsPath)) RunSummary(0L, 0L, numBuckets)
+    else {
+      val m = spark.read.parquet(metricsPath).filter($"run_id" === runId)
+        .agg(coalesce(sum($"docs_parsed"), lit(0L)),
+          coalesce(sum($"parse_failures"), lit(0L))).collect()(0)
+      RunSummary(m.getLong(0), m.getLong(1), numBuckets)
+    }
   }
 }
 

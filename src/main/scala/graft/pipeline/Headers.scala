@@ -51,17 +51,10 @@ object Headers {
       .agg(max(struct(headerCols.map(col): _*)).as("__h"))
       .select(col("url") +: headerCols.map(c => col(s"__h.$c").as(c)): _*)
       .withColumn("url_bucket", pmod(xxhash64(col("url")), lit(numBuckets)).cast("int"))
-    // the dynamic-overwrite committer writes no _SUCCESS marker — detect
-    // an existing sidecar by its partition directories, through Hadoop FS
-    // so scheme-qualified paths (file://, hdfs://, s3a://) are seen too
-    // (a java.io.File check would silently skip the carry and lose data)
-    val sidecarExists = {
-      val p = new org.apache.hadoop.fs.Path(outDir)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.startsWith("url_bucket="))
-    }
+    // scheme-aware probe: a java.io.File check would miss file://, hdfs://,
+    // s3a:// sidecars and silently skip the carry, losing data
     val merged =
-      if (!sidecarExists) fresh
+      if (!Extract.hasData(s, outDir)) fresh
       else {
         // touched buckets collected driver-side (≤ numBuckets small ints):
         // a static isin filter guarantees partition pruning at plan time —
@@ -76,11 +69,7 @@ object Headers {
           .select(fresh.columns.map(col): _*)
         fresh.unionByName(carry).localCheckpoint()
       }
-    merged
-      .repartition(numBuckets, col("url_bucket"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("url_bucket").parquet(outDir)
+    Extract.writeBuckets(merged.repartition(numBuckets, col("url_bucket")), outDir)
   }
 
   /** Keep CURRENT rows whose headers are new or changed vs `stored`

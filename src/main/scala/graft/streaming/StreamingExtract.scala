@@ -62,24 +62,22 @@ object StreamingExtract {
   /** Streaming WARC ingestion → docs_clean parquet sink (AvailableNow
     * drains the backlog of new archives and stops). Returns the query. */
   def extractWarcStream(spark: SparkSession, inputDir: String, outDir: String,
-                        checkpoint: String, availableNow: Boolean = true) = {
-    import spark.implicits._
-    val docs = Extract.extract(readWarcPages(spark, inputDir)).map(_.doc)
-    val writer = docs.writeStream
-      .format("parquet")
-      .option("path", s"$outDir/docs_clean_stream")
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
-  }
+                        checkpoint: String, availableNow: Boolean = true) =
+    docsCleanSink(readWarcPages(spark, inputDir), outDir, checkpoint, availableNow)
 
   /** Streaming extraction → docs_clean parquet sink (AvailableNow drains the
     * backlog and stops — the scheduled re-scrape analog). Returns the query. */
   def extractStream(spark: SparkSession, inputDir: String, outDir: String,
-                    checkpoint: String, availableNow: Boolean = true) = {
-    import spark.implicits._
-    val docs = Extract.extract(readPages(spark, inputDir)).map(_.doc)
-    val writer = docs.writeStream
+                    checkpoint: String, availableNow: Boolean = true) =
+    docsCleanSink(readPages(spark, inputDir), outDir, checkpoint, availableNow)
+
+  /** The one streaming sink both sources share: extraction map → append-mode
+    * parquet under `outDir/docs_clean_stream`, exactly-once per input file
+    * through `checkpoint`. */
+  private def docsCleanSink(pages: Dataset[PageRow], outDir: String,
+                            checkpoint: String, availableNow: Boolean) = {
+    import pages.sparkSession.implicits._
+    val writer = Extract.extract(pages).map(_.doc).writeStream
       .format("parquet")
       .option("path", s"$outDir/docs_clean_stream")
       .option("checkpointLocation", checkpoint)
